@@ -382,6 +382,15 @@ def unigram_nll(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def _count_threshold(name: str, value) -> int:
+    """An integral count cutoff for a ``HAVING count(*) >= n`` clause:
+    ``int()`` alone would silently turn 2.5 into 2 and keep n-grams
+    seen twice."""
+    if isinstance(value, bool) or int(value) != value:
+        raise ValueError(f"{name} must be an integer, got {value!r}")
+    return int(value)
+
+
 def _token_arrays(df: DataFrame, text_col: str) -> DataFrame:
     """(doc_id, ws) with the normalized word array; drops docs that
     normalize to nothing (split('') yields [''])."""
@@ -545,6 +554,7 @@ def stupid_backoff_trigram_nll(
     (``repr`` + ``D`` suffix keeps the doubles bit-identical) — so the
     optimized physical plan and the output are unchanged
     (oracle-verified at sf0.001/0.01/0.1 and under the hostile tz)."""
+    min_count = _count_threshold("trigram_min_count", trigram_min_count)
     from ..util import persist_shared, register_temp_view
 
     # persist the token arrays (bounded: one row per doc) — they fan
@@ -584,7 +594,7 @@ def stupid_backoff_trigram_nll(
                                      element_at(ws, i + 2) AS w3))) AS tg
                 FROM {v_model} WHERE size(ws) >= 3)
           GROUP BY tg.w1, tg.w2, tg.w3
-          HAVING count(*) >= {int(trigram_min_count)}),
+          HAVING count(*) >= {min_count}),
         triples AS (
           SELECT doc_id, tg.w1 AS w1, tg.w2 AS w2, tg.w3 AS w3
           FROM (SELECT doc_id, explode(transform(sequence(1, size(ws) - 2),
@@ -686,6 +696,7 @@ def stupid_backoff_ngram_nll(
     evaluate the identical scalar tree."""
     if not 2 <= n <= 5:
         raise ValueError(f"n must be in [2, 5], got {n}")
+    min_count = _count_threshold("min_count", min_count)
     from ..util import persist_shared, register_temp_view
 
     # persist the token arrays (bounded: one row per doc) — they fan
@@ -722,7 +733,7 @@ def stupid_backoff_ngram_nll(
         keys = ", ".join(f"g.g{j + 1} AS g{j + 1}" for j in range(o))
         gb = ", ".join(f"g.g{j + 1}" for j in range(o))
         having = (
-            f"\n          HAVING count(*) >= {int(min_count)}" if o >= 3 else ""
+            f"\n          HAVING count(*) >= {min_count}" if o >= 3 else ""
         )
         gram_ctes.append(
             f"t{o} AS (\n"

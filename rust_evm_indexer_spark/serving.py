@@ -27,6 +27,19 @@ Semantics are pinned to the Spark path, not reimplemented freely:
 - `tests/test_serving.py` drives randomized filters through BOTH paths
   and asserts identical pages, so the tiers cannot drift apart.
 
+Memory posture: every request still reads CURRENT (one tiny file), so
+a commit, rollback or compaction by any writer is visible on the next
+request — but nothing immutable is read twice.  The store memoizes the
+resolved manifest (and its parsed read schema) per version, and keeps a
+byte-bounded LRU of decoded fragments (``TableStore.fragment_table``,
+``TableStore._FRAGMENT_CACHE_BYTES``): a surviving fragment is decoded
+from parquet once and then filtered and projected in process.  Both are
+safe without invalidation because version records are written once
+and fragment paths are never rewritten — a rollback, delete or
+compaction writes NEW paths, so a request can only reach cached
+fragments its own manifest names.  A fragment too large for the cache
+is scanned on disk with parquet row-group pushdown, as before.
+
 Scale posture: fragments are block-clustered, so the scan visits them
 in min_block order and STOPS once the page's k-th row precedes every
 remaining fragment (the file-skipping analog of the reference walking
@@ -58,11 +71,13 @@ class ArrowServing:
     """Point/page executor over a :class:`TableStore` via pyarrow.
 
     Reads are LIVE the same way the Spark API path is: every request
-    resolves the CURRENT manifest (one tiny read), prunes fragments
-    through the store's index tiers, and scans only the survivors with
-    parquet row-group predicate pushdown.  ``max_fragments`` bounds the
-    in-process work per request: past it, :class:`ServingFallback`
-    routes the request to the Spark path."""
+    reads the CURRENT version (one tiny read; the store re-resolves the
+    manifest only when it advances), prunes fragments through the
+    store's index tiers, and filters only the survivors — decoded
+    Arrow tables from the store's fragment cache, or an on-disk
+    pushdown scan for a fragment too large to cache.
+    ``max_fragments`` bounds the in-process work per request: past it,
+    :class:`ServingFallback` routes the request to the Spark path."""
 
     def __init__(self, store, max_fragments: int = 64):
         self.store = store
@@ -118,7 +133,7 @@ class ArrowServing:
         stop_after: int | None = None,
         ordered: bool = False,
     ) -> list[dict]:
-        """Prune → per-fragment pyarrow scan → row dicts.
+        """Prune → per-fragment filter + projection → row dicts.
 
         ``stop_after`` + ``ordered``: visit fragments in min_block
         order and stop once ``stop_after`` rows are collected AND the
@@ -154,14 +169,23 @@ class ArrowServing:
             )
         rows: list[dict] = []
         for i, frag in enumerate(frags):
-            ds = pa_ds.dataset(
+            tbl = self.store.fragment_table(frag)
+            # too large for the fragment cache: on-disk scan with
+            # row-group predicate pushdown
+            src = tbl if tbl is not None else pa_ds.dataset(
                 str(self.store.root / frag.path), format="parquet"
             )
             cols = ref_cols
             if cols is not None:
-                present = set(ds.schema.names)
+                present = set(src.schema.names)
                 cols = [c for c in cols if c in present]
-            tbl = ds.to_table(filter=pa_filter, columns=cols)
+            if tbl is None:
+                tbl = src.to_table(filter=pa_filter, columns=cols)
+            else:
+                if pa_filter is not None:
+                    tbl = tbl.filter(pa_filter)
+                if cols is not None:
+                    tbl = tbl.select(cols)
             if stop_after is not None:
                 if ordered:
                     tbl = tbl.sort_by(

@@ -82,9 +82,12 @@ def read_parquet_memo(spark: SparkSession, path: str | Path) -> DataFrame:
     immutable materialized exports (PQ codes, IVF stores, fixture
     snapshots) that many catalog entries re-resolve per call.  For a
     directory the key uses the newest data-file mtime, so a regenerated
-    export invalidates naturally."""
+    export invalidates naturally, and the data-file count joins the key
+    so that deleting a part file (which leaves the newest mtime alone)
+    invalidates too."""
     p = Path(path)
     anchor = p
+    extra = f"dir:{p}"
     if p.is_dir():
         # RECURSIVE glob (ADVICE r12): cell-partitioned exports
         # (codes_by_cell*/cell=N/part.parquet) have no top-level data
@@ -93,7 +96,8 @@ def read_parquet_memo(spark: SparkSession, path: str | Path) -> DataFrame:
         # freshness anchor
         files = sorted(p.rglob("*.parquet"), key=lambda f: f.stat().st_mtime_ns)
         anchor = files[-1] if files else p
-    key = _memo_key(spark, anchor, extra=f"dir:{p}")
+        extra += f":files={len(files)}"
+    key = _memo_key(spark, anchor, extra=extra)
     if key is not None and key in _TABLE_PLAN_MEMO:
         return _TABLE_PLAN_MEMO[key]
     df = spark.read.parquet(str(p))

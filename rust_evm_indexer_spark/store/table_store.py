@@ -57,10 +57,12 @@ stays on whatever filesystem Spark writes to (file://, s3a://).
 
 from __future__ import annotations
 
+import copy
 import io as _io_mod
 import json
 import re
 import os
+import threading
 import time as _time_mod
 import uuid
 from dataclasses import dataclass, field
@@ -74,6 +76,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..schemas import EVM_SCHEMAS
 from .data_io import make_staging_rel as _make_staging_rel
+from .fragment_cache import FragmentCache
 
 _CURRENT = "CURRENT"
 
@@ -568,6 +571,11 @@ class MaintenancePolicy:
 class TableStore:
     """See module docstring.  One instance per store root directory."""
 
+    #: byte budget of the per-instance fragment cache (decoded Arrow
+    #: tables for the serving tier + bloom sidecar bitsets); see
+    #: store/fragment_cache.py
+    _FRAGMENT_CACHE_BYTES = 64 * 1024 * 1024
+
     def __init__(
         self,
         spark: SparkSession,
@@ -621,18 +629,17 @@ class TableStore:
         #: continues the chain with no in-process bookkeeping.
         self.log_commits = log_commits
         self.checkpoint_interval = checkpoint_interval
-        #: LRU of bloom sidecar bitsets keyed by (fragment path, column).
-        #: Fragments are immutable, so a cached bitset can never go
-        #: stale; without it every point lookup re-reads the few-KB
-        #: sidecar of every min/max-surviving fragment from disk — at
-        #: high lookup QPS on a hot table, that's the same file hundreds
-        #: of times.  Capped; bitsets are ~n·10/8 bytes each.
-        from collections import OrderedDict
-
-        self._bloom_sidecar_cache: OrderedDict[tuple[str, str], bytes] = (
-            OrderedDict()
-        )
-        self._bloom_sidecar_cache_max = 4096
+        #: byte-bounded LRU of decoded fragment artifacts keyed by
+        #: (fragment path, artifact): the whole-fragment Arrow table the
+        #: serving tier filters in process (:meth:`fragment_table`) and
+        #: each bloom sidecar bitset (:meth:`_bloom_keeps`).  Fragments
+        #: are immutable, so an entry can never go stale; without it
+        #: every request re-reads and re-decodes the same files.
+        self._fragment_cache = FragmentCache(self._FRAGMENT_CACHE_BYTES)
+        #: the resolved manifest of the last CURRENT version seen (see
+        #: :meth:`current_manifest`)
+        self._current: Manifest | None = None
+        self._current_lock = threading.Lock()
         #: manifest-tier storage backend.  POSIX directory by default;
         #: pass an object-store adapter (see store/manifest_io.py) to
         #: run the identical commit protocol over S3-style conditional
@@ -693,18 +700,36 @@ class TableStore:
     def current_version(self) -> int:
         """The committed manifest version (0 = empty store) — one small
         file read, no manifest parse.  Cheap enough to call per API
-        request as a staleness probe (``EvmApi`` refreshes its cached
-        frames only when this advances)."""
+        request as a staleness probe: :meth:`current_manifest` re-resolves
+        the manifest chain only when this advances, and ``EvmApi``
+        rebuilds its cached Spark frames likewise."""
         try:
             return int(self._mio.get_text(_CURRENT))
         except FileNotFoundError:
             return 0
 
     def current_manifest(self) -> Manifest:
+        """The manifest CURRENT names, memoized per version: CURRENT is
+        read on every call (so commits by any writer are seen at once),
+        but the checkpoint + delta-tail resolution runs only when the
+        version differs from the memoized one.  Safe because a version
+        record is written once (put-if-absent) and never changes, and
+        CURRENT only moves forward.  Callers must not mutate the
+        returned manifest; writers build a new one for the next version.
+        Time travel (:meth:`manifest_at`) is not memoized."""
         version = self.current_version()
         if version == 0:
             return Manifest()
-        return self.manifest_at(version)
+        memo = self._current
+        if memo is not None and memo.version == version:
+            return memo
+        m = self.manifest_at(version)
+        with self._current_lock:
+            # a slow request that resolved an older version must not
+            # replace a newer memo
+            if self._current is None or self._current.version < version:
+                self._current = m
+        return m
 
     def manifest_at(self, version: int) -> Manifest:
         """A specific manifest version — time travel, bounded by
@@ -2586,18 +2611,14 @@ class TableStore:
             params = frag.blooms.get(col)
             if params is None or value is None:
                 continue
-            ck = (frag.path, col)
-            bits = self._bloom_sidecar_cache.get(ck)
+            ck = (frag.path, f"bloom:{col}")
+            bits = self._fragment_cache.get(ck)
             if bits is None:
                 try:
                     bits = _bloom.read_sidecar(fdir, col)
                 except OSError:
                     continue
-                self._bloom_sidecar_cache[ck] = bits
-                if len(self._bloom_sidecar_cache) > self._bloom_sidecar_cache_max:
-                    self._bloom_sidecar_cache.popitem(last=False)
-            else:
-                self._bloom_sidecar_cache.move_to_end(ck)
+                self._fragment_cache.put(ck, bits, len(bits))
             probe = value if isinstance(value, (list, tuple)) else (value,)
             if all(
                 v is not None
@@ -2609,15 +2630,44 @@ class TableStore:
 
     def _read_schema(self, m: Manifest, table: str):
         """Snapshot read schema: the manifest's evolved schema if any,
-        else the static EVM DDL schema, else None (schema-on-read)."""
+        else the static EVM DDL schema, else None (schema-on-read).
+        Parsed once per manifest object and kept on it, so the memoized
+        current manifest parses each table's schema once per version."""
         from pyspark.sql import types as T
 
-        if table in m.schemas:
-            return T.StructType.fromJson(m.schemas[table])
-        return EVM_SCHEMAS.get(table)
+        parsed = m.__dict__.setdefault("_read_schemas", {})
+        if table not in parsed:
+            parsed[table] = (
+                T.StructType.fromJson(m.schemas[table])
+                if table in m.schemas
+                else EVM_SCHEMAS.get(table)
+            )
+        return parsed[table]
 
     def read_status(self) -> dict | None:
-        return self.current_manifest().status
+        """The ingest checkpoint of the current version — a copy, so a
+        caller's edits cannot leak into the memoized manifest."""
+        return copy.deepcopy(self.current_manifest().status)
+
+    def fragment_table(self, frag: Fragment):
+        """The whole fragment decoded as an Arrow table, through the
+        fragment cache — what the serving tier filters in process.
+        None when the fragment is too large to admit under the cache
+        budget (by its recorded on-disk bytes, else by its decoded
+        size, remembered as a negative entry): the caller then scans it
+        on disk with predicate pushdown."""
+        cache = self._fragment_cache
+        if frag.bytes is not None and frag.bytes > cache.max_entry:
+            return None
+
+        def load():
+            tbl = pa_ds.dataset(
+                str(self.root / frag.path), format="parquet"
+            ).to_table()
+            n = tbl.get_total_buffer_size()
+            return (tbl, n) if n <= cache.max_entry else (None, 0)
+
+        return cache.get_or_load((frag.path, "table"), load)
 
     def table_rows(self, table: str, *, manifest: Manifest | None = None) -> int:
         """Metadata-only row count (the /stats fast path)."""

@@ -238,11 +238,17 @@ def test_rollback_rewrite_keeps_blooms(spark, tmp_path):
         assert f.blooms and "contract_address" in f.blooms
 
 
-def test_bloom_sidecar_cache_hits_and_caps(spark, tmp_path):
+def test_bloom_sidecar_cache_hits_and_caps(spark, tmp_path, monkeypatch):
     """Repeated point probes must read each (fragment, column) sidecar
-    from disk ONCE — fragments are immutable, so the LRU can never go
-    stale — and the cache stays bounded."""
+    from disk ONCE — fragments are immutable, so the store's fragment
+    cache can never go stale — and the cache stays bounded by bytes,
+    evicting the least recently used entry."""
     from rust_evm_indexer_spark.store import TableStore
+    from rust_evm_indexer_spark.store import bloom as _bloom
+    from rust_evm_indexer_spark.store.fragment_cache import (
+        _ENTRY_OVERHEAD,
+        FragmentCache,
+    )
 
     store = TableStore(spark, tmp_path / "cstore",
                        bloom_columns={"pts": ("addr",)}, dict_columns={})
@@ -250,19 +256,32 @@ def test_bloom_sidecar_cache_hits_and_caps(spark, tmp_path):
         [(i, f"0x{i:04x}", 1) for i in range(50)],
         "id: long, addr: string, block_number: long")})
     frag = store.current_manifest().tables["pts"][0]
-    assert len(store._bloom_sidecar_cache) == 0
+    assert len(store._fragment_cache) == 0
+    reads = []
+    real_read = _bloom.read_sidecar
+
+    def counting_read(fdir, col):
+        reads.append(col)
+        return real_read(fdir, col)
+
+    monkeypatch.setattr(_bloom, "read_sidecar", counting_read)
     for probe in ("0x0001", "0x0002", "0x0001", "0xffff"):
         store._frag_keeps(frag, {"addr": probe})
-    assert list(store._bloom_sidecar_cache) == [(frag.path, "addr")]
+    assert reads == ["addr"]
+    key = (frag.path, "bloom:addr")
+    assert store._fragment_cache.keys() == [key]
     # the cached bitset answers identically to a fresh read
-    from rust_evm_indexer_spark.store import bloom as _bloom
-    assert store._bloom_sidecar_cache[(frag.path, "addr")] == \
-        _bloom.read_sidecar(store.root / frag.path, "addr")
-    # cap: a miss-insert past the cap evicts the oldest entry
-    store._bloom_sidecar_cache_max = 1
-    store._bloom_sidecar_cache[("stale", "c")] = b"x"
-    store._bloom_sidecar_cache.move_to_end((frag.path, "addr"), last=False)
-    del store._bloom_sidecar_cache[(frag.path, "addr")]  # force a re-read
+    assert store._fragment_cache.get(key) == \
+        real_read(store.root / frag.path, "addr")
+    # cap: fill a budget of exactly four bitsets with other entries; the
+    # re-read bitset then evicts the least recently used one
+    n = len(store._fragment_cache.get(key))
+    store._fragment_cache = FragmentCache(4 * (n + _ENTRY_OVERHEAD))
+    stale = [(f"stale{i}", "bloom:c") for i in range(4)]
+    for k in stale:
+        assert store._fragment_cache.put(k, b"x" * n, n)
+    store._fragment_cache.get(stale[0])  # now most recently used
     store._frag_keeps(frag, {"addr": "0x0003"})
-    assert len(store._bloom_sidecar_cache) == 1
-    assert (frag.path, "addr") in store._bloom_sidecar_cache  # oldest evicted
+    assert reads == ["addr", "addr"]
+    assert store._fragment_cache.keys() == [stale[2], stale[3], stale[0], key]
+    assert store._fragment_cache.nbytes <= store._fragment_cache.budget

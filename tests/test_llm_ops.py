@@ -1022,6 +1022,18 @@ def test_stupid_backoff_trigram_pruning_lever(spark):
     assert prune > keep
 
 
+def test_backoff_count_cutoffs_reject_fractions(spark):
+    """A fractional cutoff would be truncated in the HAVING clause (2.5
+    silently keeping n-grams seen twice): it is rejected instead, while
+    an integral float still means its integer."""
+    df = spark.createDataFrame([("m", "p q r p q r")], ["doc_id", "text"])
+    with pytest.raises(ValueError, match="trigram_min_count"):
+        tx.stupid_backoff_trigram_nll(df, trigram_min_count=2.5)
+    with pytest.raises(ValueError, match="min_count"):
+        tx.stupid_backoff_ngram_nll(df, n=3, min_count=2.5)
+    assert tx._count_threshold("min_count", 2.0) == 2
+
+
 @pytest.mark.slow
 def test_semantic_gate_index_growth_equals_survivors(spark, tmp_path):
     """The full three-stage 'only the delta pays' admission path

@@ -380,3 +380,181 @@ def test_hot_key_falls_back_to_spark_route(spark, tmp_path):
     assert [r["id"] for r in body["logs"]] == [
         r["id"] for r in spark_page.logs
     ]
+
+
+def test_one_api_stays_live_across_commit_rollback_and_vacuum(
+    spark, evm, tmp_path, monkeypatch
+):
+    """One EvmApi instance, its memoized manifest and its fragment cache
+    must track every event on the store: a commit makes a new block
+    visible on the next request, a rollback turns a retracted height
+    into 404, and after maintain + vacuum no request reads a fragment
+    the current manifest no longer names."""
+    from pyspark.sql import functions as F
+
+    from rust_evm_indexer_spark.api import ApiError, EvmApi
+
+    store = TableStore(spark, tmp_path / "live")
+    heights = sorted(
+        r[0] for r in evm["blocks"].select("block_number").collect()
+    )
+    cut = heights[len(heights) // 2]
+
+    def commit(lo, hi):
+        rng = (F.col("block_number") >= lo) & (F.col("block_number") <= hi)
+        store.commit({t: evm[t].filter(rng)
+                      for t in ("blocks", "transactions", "logs")})
+
+    commit(heights[0], cut)
+    api = EvmApi.from_store(store)
+    spark_api = EvmApi.from_store(store, fast=False)
+    late = heights[-1]
+    with pytest.raises(ApiError) as exc:
+        api.get_block(str(late))
+    assert exc.value.status == 404
+    assert api.get_block(str(cut)) == spark_api.get_block(str(cut))
+
+    commit(cut + 1, heights[-1])
+    assert api.get_block(str(late)) == spark_api.get_block(str(late))
+    assert api.get_stats()["totalBlocks"] == len(heights)
+
+    store.rollback_from(late)
+    with pytest.raises(ApiError) as exc:
+        api.get_block(str(late))
+    assert exc.value.status == 404
+    assert api.get_stats()["totalBlocks"] == len(heights) - 1
+    assert api.post_logs({"pageSize": 100}) == spark_api.post_logs(
+        {"pageSize": 100}
+    )
+
+    before = {f.path for f in store.current_manifest().tables["blocks"]}
+    store.maintain("blocks", max_fragments=1)
+    store.vacuum(grace_seconds=0, keep_manifests=1)
+    current = {f.path for f in store.current_manifest().tables["blocks"]}
+    assert current and not (current & before)
+    read: list[str] = []
+    real = store.fragment_table
+
+    def recording(frag):
+        read.append(frag.path)
+        return real(frag)
+
+    monkeypatch.setattr(store, "fragment_table", recording)
+    for h in (heights[0], cut, heights[-2]):
+        assert api.get_block(str(h)) == spark_api.get_block(str(h))
+    assert read and set(read) <= current
+
+
+def test_fragments_too_large_to_cache_scan_on_disk(
+    spark, served_store, evm, monkeypatch
+):
+    """With a budget too small to admit any fragment, every scan takes
+    the on-disk pushdown path and answers exactly as the cached path."""
+    monkeypatch.setattr(TableStore, "_FRAGMENT_CACHE_BYTES", 64)
+    tiny = TableStore(spark, served_store.root)
+    on_disk, cached = ArrowServing(tiny), ArrowServing(served_store)
+    addr = _sample_values(evm["logs"], "contract_address", n=1)[0]
+    for flt in (GetLogsFilter(page_size=7),
+                GetLogsFilter(address=addr, page_size=5)):
+        assert on_disk.get_logs_page(flt) == cached.get_logs_page(flt)
+    n = str(on_disk.get_logs_page(GetLogsFilter(page_size=1)).logs[0][
+        "block_number"])
+    assert on_disk.get_block(n) == cached.get_block(n)
+    assert len(tiny._fragment_cache) == 0
+
+
+def test_fragment_cache_stays_within_budget(spark, tmp_path, monkeypatch):
+    """A long-lived store that commits and serves in a loop keeps its
+    fragment cache at or under the byte budget, evicting as it goes,
+    and every read stays exact."""
+    import pyarrow.dataset as pa_ds
+
+    monkeypatch.setattr(TableStore, "_FRAGMENT_CACHE_BYTES", 4 * 1024)
+    store = TableStore(spark, tmp_path / "budget",
+                       bloom_columns={}, dict_columns={})
+    serving = ArrowServing(store, max_fragments=1000)
+    cache = store._fragment_cache
+    for b in range(100):
+        # a JVM-only plan: no Python worker, so a commit costs ~0.2 s
+        row = spark.range(1, numPartitions=1).selectExpr(
+            f"{b}L AS id", f"'v{b}' AS v", f"{100 + b}L AS block_number"
+        )
+        store.commit({"t": row}, status={"last_processed_block": 100 + b})
+        got = serving._scan(
+            "t", pa_filter=pa_ds.field("block_number") == 100 + b,
+            columns=None, min_block=100 + b, max_block=100 + b,
+            stop_after=1,
+        )
+        assert [r["v"] for r in got] == [f"v{b}"]
+        assert store.read_status() == {"last_processed_block": 100 + b}
+        assert cache.nbytes <= cache.budget
+    everything = serving._scan("t", pa_filter=pa_ds.field("id") >= 0,
+                               columns=["id"])
+    assert sorted(r["id"] for r in everything) == list(range(100))
+    assert cache.nbytes <= cache.budget
+    assert 0 < len(cache) < 100  # admitted, and evicted
+
+
+def test_shared_store_serves_while_another_thread_commits(spark, tmp_path):
+    """The threaded-server shape: reader threads share ONE TableStore
+    (its manifest memo and fragment cache) while a writer thread commits
+    through the same instance.  Row counts a reader sees never go
+    backwards and always land on a batch boundary."""
+    import sys
+    import threading
+
+    import pyarrow.dataset as pa_ds
+
+    store = TableStore(spark, tmp_path / "shared",
+                       bloom_columns={}, dict_columns={})
+    rows = 4
+
+    def batch(b):
+        return spark.createDataFrame(
+            [(b * rows + i, 100 + b) for i in range(rows)],
+            "id long, block_number long",
+        )
+
+    store.commit({"t": batch(0)})
+    serving = ArrowServing(store)
+    stop = threading.Event()
+    failures: list[BaseException] = []
+    batches = 6
+
+    def writer():
+        try:
+            for b in range(1, batches + 1):
+                store.commit({"t": batch(b)})
+        except BaseException as e:  # noqa: BLE001
+            failures.append(e)
+        finally:
+            stop.set()
+
+    def reader():
+        last = 0
+        try:
+            while not stop.is_set():
+                n = len(serving._scan("t", pa_filter=pa_ds.field("id") >= 0,
+                                      columns=["id"]))
+                assert n >= last and n % rows == 0, (n, last)
+                last = n
+        except BaseException as e:  # noqa: BLE001
+            failures.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=writer)] + [
+            threading.Thread(target=reader) for _ in range(6)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+    assert not failures, failures
+    got = serving._scan("t", pa_filter=pa_ds.field("id") >= 0, columns=["id"])
+    assert len(got) == rows * (batches + 1)
+    assert store._fragment_cache.nbytes <= store._fragment_cache.budget

@@ -186,3 +186,39 @@ def test_store_model_upsert_delete_compact_chain(spark, tmp_path):
     store.vacuum(keep_manifests=2)
     got2 = {r["doc_id"]: r["text"] for r in store.read("docs").collect()}
     assert got2 == got  # vacuum never changes visible state
+
+
+def test_current_manifest_memo_and_read_status_copy(spark, tmp_path):
+    """current_manifest() resolves each version once and re-resolves as
+    soon as CURRENT advances; read_status() hands out a copy, so a
+    caller's edit cannot leak into the memoized manifest; time travel
+    to a vacuumed version still raises."""
+    store = TableStore(spark, tmp_path / "memo",
+                       bloom_columns={}, dict_columns={})
+    for i in range(3):
+        store.commit(
+            {"docs": spark.createDataFrame([(i, f"t-{i}", i)], SCHEMA)},
+            status={"last_processed_block": i, "nested": {"head": i}},
+        )
+    m = store.current_manifest()
+    assert store.current_manifest() is m
+    assert store._read_schema(m, "docs") is store._read_schema(m, "docs")
+    status = store.read_status()
+    status["last_processed_block"] = -1
+    status["nested"]["head"] = -1
+    assert store.read_status() == {"last_processed_block": 2,
+                                   "nested": {"head": 2}}
+    # another instance commits: the next call sees the new version
+    other = TableStore(spark, tmp_path / "memo",
+                       bloom_columns={}, dict_columns={})
+    other.commit({"docs": spark.createDataFrame([(9, "t-9", 9)], SCHEMA)},
+                 status={"last_processed_block": 9})
+    m2 = store.current_manifest()
+    assert m2.version == m.version + 1 and m2 is not m
+    assert store.read_status() == {"last_processed_block": 9}
+    assert store.table_rows("docs") == 4
+    store.compact("docs", max_fragments=1)
+    store.vacuum(grace_seconds=0, keep_manifests=1)
+    with pytest.raises(ValueError, match="not found"):
+        store.manifest_at(1)
+    assert store.table_rows("docs") == 4
